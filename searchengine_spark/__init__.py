@@ -5,7 +5,7 @@ reference engine (Safan05/SearchEngine: crawl → MongoDB inverted index →
 TF-IDF/PageRank ranker; see SURVEY.md). The architecture is columnar
 DataFrames end-to-end: Catalyst plans the scans/joins/aggregations, and the
 only Python crossings are a small set of vectorized Arrow (pandas) UDFs for
-tokenization, posting-list codecs, and block-max WAND query execution.
+tokenization, posting-list codecs, and block-max top-k query execution.
 
 Modules
 -------

@@ -1,4 +1,4 @@
-"""Segment encode/decode + block-max WAND query execution
+"""Segment encode/decode + block-max top-k query execution
 (SURVEY.md §4.2-2/3; north rule: "groupBy-term into delta-gap +
 varint-compressed posting lists with per-block skip pointers and block-max
 scores, merge partition-local segments into a global index").
@@ -8,8 +8,8 @@ Physical design (doc-sharded, term-bucketed):
 - **shard** = contiguous doc_id range (``doc_id // shard_span``). Each shard
   holds the postings of its docs for every term — a partition-local index
   segment. Doc-range sharding keeps delta-gaps small (better compression)
-  and makes query execution embarrassingly parallel: WAND runs per shard,
-  the global top-k is a TakeOrderedAndProject merge of per-shard heaps.
+  and makes query execution embarrassingly parallel: block-max runs per
+  shard, the global top-k is a TakeOrderedAndProject merge of per-shard heaps.
   Hot terms split across shards automatically — no single reducer ever sees
   a whole stopword-term posting list (skew defusal at encode time).
 - **bucket** = pmod(hash(term), n_buckets) — the write partition column, so
@@ -26,6 +26,7 @@ from __future__ import annotations
 import heapq
 import math
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -552,7 +553,7 @@ def incremental_build_postings(docs: DataFrame, shard_span: int = 64) -> DataFra
     return decode_postings(merged)
 
 
-# ------------------------------------------------------------------ WAND
+# ------------------------------------------------------------------ top-k
 
 def _micros(x: float) -> int:
     """round(x*1e6) half-up — the integer-micros contract every gate uses
@@ -561,319 +562,138 @@ def _micros(x: float) -> int:
     return int(math.floor(x * 1e6 + 0.5))
 
 
-class _TermIter:
-    """Lazy cursor over one term's sorted block list — the shared postings
-    iterator of every dynamic-pruning executor (_wand_shard,
-    _maxscore_shard). Blocks stepped over by skip pointers are never
-    decoded."""
+def _shard_plan(
+    spark: SparkSession,
+    segments: DataFrame,
+    lexicon: DataFrame,
+    query_terms: list[str],
+    n_buckets: int,
+    shard_fn,
+    schema: str,
+    require_all: bool = False,
+) -> DataFrame:
+    """THE driver plan of every segment-served query: one tiny |q|-row
+    lexicon lookup (idf + write bucket) → bucket-partition-pruned segment
+    scan → ``shard_fn(term_blocks, idfs)`` per doc-range shard in
+    ``applyInPandas``, returning a pandas frame of ``schema``. One
+    definition, so a pruning-predicate or fast-path fix reaches every
+    executor (BM25 top-k, phrase, proximity) at once.
 
-    __slots__ = ("term", "blocks", "bi", "pi", "ids", "tfs", "dls", "ub",
-                 "idf", "avgdl", "micros")
+    ``require_all``: phrase/proximity semantics — a query term absent from
+    the lexicon makes the query unmatchable, answered without a scan (index
+    and query stemming can disagree, quirk Q2, so this happens even for
+    phrases present in the raw text — reference-faithful)."""
+    terms = list(dict.fromkeys(query_terms))
+    rows = (
+        lexicon.filter(F.col("term").isin(terms))
+        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
+        .collect()
+        if terms
+        else []
+    )
+    idfs = {r["term"]: r["idf_bm25"] for r in rows}
+    if not idfs or (require_all and len(idfs) < len(terms)):
+        return spark.createDataFrame([], schema)
+    buckets = sorted({int(r["bucket"]) for r in rows})
+    pruned = segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
 
-    def __init__(self, term: str, blocks: list[dict], idf: float, avgdl: float,
-                 micros: bool):
-        self.term = term
-        self.blocks = sorted(blocks, key=lambda b: b["block_id"])
-        self.bi = 0
-        self.idf = idf
-        self.avgdl = avgdl
-        self.micros = micros
-        self.ub = max(b["block_max_score"] for b in self.blocks)
-        if micros:
-            self.ub = _micros(self.ub)
-        self.ids = None  # current block decoded lazily
+    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        term_blocks: dict[str, list[dict]] = {}
+        for row in pdf.to_dict("records"):
+            term_blocks.setdefault(row["term"], []).append(row)
+        return shard_fn(term_blocks, idfs)
 
-    @property
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    def _ensure(self):
-        # decode the current block only when its postings are touched —
-        # blocks stepped over by skip pointers are never decoded
-        if self.ids is None and not self.exhausted:
-            self.ids, self.tfs, self.dls = codec.decode_block(self.blocks[self.bi])
-            self.pi = 0
-
-    def _next_block(self):
-        self.bi += 1
-        self.ids = None
-
-    @property
-    def cur(self) -> int:
-        if self.exhausted:
-            return 1 << 62
-        self._ensure()
-        return int(self.ids[self.pi])
-
-    def cur_block_max(self) -> float:
-        if self.exhausted:
-            return 0
-        bm = self.blocks[self.bi]["block_max_score"]
-        return _micros(bm) if self.micros else bm
-
-    def advance_to(self, target: int):
-        # block-level skip via skip_doc_id (no decode), then in-block gallop
-        while not self.exhausted and self.blocks[self.bi]["skip_doc_id"] < target:
-            self._next_block()
-        if self.exhausted:
-            return
-        self._ensure()
-        j = int(np.searchsorted(self.ids[self.pi :], target))
-        self.pi += j
-        if self.pi >= len(self.ids):
-            self._next_block()
-            self.advance_to(target)
-
-    def next_doc(self):
-        self._ensure()
-        self.pi += 1
-        if self.pi >= len(self.ids):
-            self._next_block()
-
-    def score_cur(self) -> float:
-        self._ensure()
-        tf = float(self.tfs[self.pi])
-        dl = float(self.dls[self.pi])
-        c = self.idf * (tf * (codec.BM25_K1 + 1.0)) / (
-            tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / self.avgdl)
-        )
-        return _micros(c) if self.micros else c
+    return pruned.groupBy("shard").applyInPandas(run_shard, schema)
 
 
-def _wand_shard(
+def _pruned_topk(
+    spark: SparkSession,
+    segments: DataFrame,
+    lexicon: DataFrame,
+    query_terms: list[str],
+    avgdl: float,
+    k: int,
+    n_buckets: int,
+    shard_fn,
+    micros: bool = True,
+    require_all: bool = False,
+) -> DataFrame:
+    """Top-k over the shared driver plan (``_shard_plan``): the per-shard
+    executor ``shard_fn(term_blocks, idfs, avgdl, k, micros=...)`` returns
+    ≤ k (score, doc_id, _) rows, and one global TakeOrderedAndProject merges
+    them. Returns (doc_id, score_micros long) with ``micros=True`` — each
+    term contribution rounded to bigint micros before the sum, the DuckDB
+    oracle's contract — or (doc_id, score double)."""
+    col, typ = ("score_micros", "long") if micros else ("score", "double")
+
+    def top(term_blocks: dict[str, list[dict]], idfs: dict[str, float]) -> pd.DataFrame:
+        rows = shard_fn(term_blocks, idfs, avgdl, k, micros=micros)
+        return pd.DataFrame(
+            [(int(d), s) for s, d, _ in rows], columns=["doc_id", col]
+        ).astype({"doc_id": "int64", col: "int64" if micros else "float64"})
+
+    per_shard = _shard_plan(
+        spark, segments, lexicon, query_terms, n_buckets, top,
+        f"doc_id long, {col} {typ}", require_all,
+    )
+    return per_shard.orderBy(F.desc(col), F.asc("doc_id")).limit(k)
+
+
+def _decode_term(blocks: list[dict]) -> dict[int, tuple]:
+    """doc_id → (positions, tf, doc_len) over one term's blocks in a shard."""
+    entry: dict[int, tuple] = {}
+    for b in blocks:
+        ids, tfs, dls = codec.decode_block(b)
+        poss = codec.decode_positions(b)
+        for d, p, tf, dl in zip(ids.tolist(), poss, tfs.tolist(), dls.tolist()):
+            entry[d] = (p, tf, dl)
+    return entry
+
+
+def _phrase_micros_in_shard(
     term_blocks: dict[str, list[dict]],
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, list[tuple[str, float]]]]:
-    """Block-max WAND over one shard's decoded block lists.
-
-    Returns up to k (score, doc_id, contribs) tuples. Exact w.r.t. brute
-    force (property-tested): pruning only skips docs whose UB sum can't beat
-    the current kth score.
-
-    With ``micros=True``, every per-term contribution is rounded to bigint
-    micros exactly as the columnar scorers do, and ALL comparisons (upper
-    bounds, pivot selection, heap threshold) run on those integers — the
-    returned scores are bit-identical to ``sum(round(contrib*1e6))``, so the
-    WAND path shares the columnar path's DuckDB oracle. Rounding is monotone,
-    so a rounded block max is still a valid upper bound for rounded
-    contributions; pruning stays exact.
-    """
-    iters = [
-        _TermIter(t, bl, idfs[t], avgdl, micros) for t, bl in term_blocks.items() if bl
-    ]
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    results: dict[int, list[tuple[str, float]]] = {}
-
-    def theta() -> float:
-        if len(heap) < k:
-            return threshold
-        return max(heap[0][0], threshold)
-
-    while True:
-        live = [it for it in iters if not it.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda it: it.cur)
-        # find pivot: first index where prefix UB sum exceeds theta
-        acc = 0.0
-        pivot_idx = None
-        for i, it in enumerate(live):
-            acc += it.ub
-            if acc > theta():
-                pivot_idx = i
-                break
-        if pivot_idx is None:
-            break  # no doc can beat theta
-        pivot_doc = live[pivot_idx].cur
-        if live[0].cur == pivot_doc:
-            # shallow block-max check before full scoring
-            bm_sum = sum(it.cur_block_max() for it in live if it.cur <= pivot_doc)
-            # ensure all iters pointing before pivot are AT pivot (they are:
-            # live[0].cur == pivot and sorted)
-            if bm_sum > theta():
-                contribs = []
-                score = 0.0
-                for it in live:
-                    if it.cur == pivot_doc:
-                        c = it.score_cur()
-                        contribs.append((it.term, c))
-                        score += c
-                if score > theta() or len(heap) < k:
-                    # deterministic re-sum in term order for oracle parity
-                    contribs.sort()
-                    score = 0.0
-                    for _, c in contribs:
-                        score += c
-                    if len(heap) < k:
-                        heapq.heappush(heap, (score, -pivot_doc))
-                        results[pivot_doc] = contribs
-                    elif (score, -pivot_doc) > heap[0]:
-                        old = heapq.heappushpop(heap, (score, -pivot_doc))
-                        results.pop(-old[1], None)
-                        results[pivot_doc] = contribs
-            for it in live:
-                if it.cur == pivot_doc:
-                    it.next_doc()
-        else:
-            # advance all iterators before the pivot up to the pivot doc
-            for it in live[:pivot_idx]:
-                it.advance_to(pivot_doc)
-
-    out = []
-    while heap:
-        s, nd = heapq.heappop(heap)
-        out.append((s, -nd, results[-nd]))
-    out.sort(key=lambda t: (-t[0], t[1]))
-    return out
-
-
-def _maxscore_shard(
-    term_blocks: dict[str, list[dict]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    threshold: float = float("-inf"),
-    micros: bool = False,
-) -> list[tuple[float, int, list[tuple[str, float]]]]:
-    """MaxScore (Turtle & Flood 1995) over one shard's block lists — the
-    second dynamic-pruning executor beside block-max WAND, sharing its
-    _TermIter cursors, heap semantics, and (with ``micros=True``) the exact
-    integer-micros contract, so both serve the same DuckDB oracle.
-
-    Terms sort by score upper bound descending and split at the current
-    heap threshold θ: the maximal SUFFIX whose UB sum ≤ θ is non-essential —
-    no document appearing only there can enter the top-k. Candidates are
-    drawn document-at-a-time from the essential prefix; non-essential lists
-    are probed by skip-pointer ``advance_to`` with early exit as soon as the
-    partial score plus the remaining UB suffix cannot beat θ. Same pruning
-    invariant as WAND (skip iff UB-bound ≤ θ), so results are identical."""
-    iters = [
-        _TermIter(t, bl, idfs[t], avgdl, micros) for t, bl in term_blocks.items() if bl
-    ]
-    iters.sort(key=lambda it: (-it.ub, it.term))  # UB desc, deterministic ties
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    results: dict[int, list[tuple[str, float]]] = {}
-    last = -1  # largest candidate evaluated so far — see monotonicity note
-
-    def theta() -> float:
-        if len(heap) < k:
-            return threshold
-        return max(heap[0][0], threshold)
-
-    while True:
-        live = [it for it in iters if not it.exhausted]  # keeps UB-desc order
-        if not live:
-            break
-        suffix = [0.0] * (len(live) + 1)
-        for i in range(len(live) - 1, -1, -1):
-            suffix[i] = suffix[i + 1] + live[i].ub
-        th = theta()
-        e = len(live)
-        while e > 0 and suffix[e - 1] <= th:
-            e -= 1
-        if e == 0:
-            break  # every remaining doc's total UB <= theta
-        ess = live[:e]
-        cand = min(it.cur for it in ess)
-        # Monotonicity guard: when an exhausted high-UB list shrinks the
-        # suffix sums, a previously non-essential list can be PROMOTED into
-        # the essential prefix while still positioned on a doc other lists
-        # have already passed — evaluating it would miss their
-        # contributions. Any doc <= last was skippable under the θ in force
-        # when it was passed, and θ only grows, so skipping it now is exact.
-        if cand <= last:
-            for it in ess:
-                if it.cur <= last:
-                    it.advance_to(last + 1)
-            continue
-        last = cand
-        contribs: list[tuple[str, float]] = []
-        score = 0.0
-        for it in ess:
-            if it.cur == cand:
-                c = it.score_cur()
-                contribs.append((it.term, c))
-                score += c
-        pruned_early = False
-        for j in range(e, len(live)):
-            if score + suffix[j] <= th:
-                pruned_early = True
-                break
-            it = live[j]
-            it.advance_to(cand)
-            if not it.exhausted and it.cur == cand:
-                c = it.score_cur()
-                contribs.append((it.term, c))
-                score += c
-        if not pruned_early and (score > th or len(heap) < k):
-            # deterministic re-sum in term order for oracle parity
-            contribs.sort()
-            score = 0.0
-            for _, c in contribs:
-                score += c
-            if len(heap) < k:
-                heapq.heappush(heap, (score, -cand))
-                results[cand] = contribs
-            elif (score, -cand) > heap[0]:
-                old = heapq.heappushpop(heap, (score, -cand))
-                results.pop(-old[1], None)
-                results[cand] = contribs
-        for it in ess:
-            if not it.exhausted and it.cur == cand:
-                it.next_doc()
-
-    out = []
-    while heap:
-        s, nd = heapq.heappop(heap)
-        out.append((s, -nd, results[-nd]))
-    out.sort(key=lambda t: (-t[0], t[1]))
-    return out
-
-
-def _phrase_topk_in_shard(
-    term_blocks: dict[str, list[dict]],
+    micros: bool = True,
+    *,
     terms: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-) -> list[tuple[float, int]]:
-    """Exact phrase top-k within one shard: decode positions for docs present
-    in ALL phrase terms' lists, keep position-adjacent docs, score them
-    directly (sorted-term fold — same floats as the join path)."""
-    per_term: list[dict[int, tuple]] = []  # doc -> (positions, tf, dl)
+) -> list[tuple[float, int, None]]:
+    """Exact phrase top-k within one shard: decode positions for docs
+    present in ALL phrase terms' lists, keep position-adjacent docs (over
+    the FULL term sequence — a repeated term must repeat adjacently), and
+    score them with a sorted-term fold. ``micros=True`` rounds each term
+    contribution to micros BEFORE the sum, so the ranking hash-matches the
+    columnar phrase_topk oracle; ``micros=False`` gives the same floats as
+    query.search_bm25's positional phrase mode. ``terms`` is the phrase's
+    full sequence; bind it with ``functools.partial`` to get the shard
+    executor signature ``_pruned_topk`` calls."""
+    per_term: list[dict[int, tuple]] = []
     for t in terms:
         blocks = term_blocks.get(t)
         if not blocks:
             return []
-        entry: dict[int, tuple] = {}
-        for b in sorted(blocks, key=lambda x: x["block_id"]):
-            ids, tfs, dls = codec.decode_block(b)
-            poss = codec.decode_positions(b)
-            for d, p, tf, dl in zip(ids.tolist(), poss, tfs.tolist(), dls.tolist()):
-                entry[d] = (p, tf, dl)
-        per_term.append(entry)
+        per_term.append(_decode_term(blocks))
     cand = set(per_term[0])
     for pm in per_term[1:]:
         cand &= set(pm)
-    out = []
+    out: list[tuple[float, int, None]] = []
     for d in cand:
         first, _, _ = per_term[0][d]
         rest = [set(pm[d][0].tolist()) for pm in per_term[1:]]
         if not any(
-            all((p + i + 1) in rest[i] for i in range(len(rest))) for p in first.tolist()
+            all((p + i + 1) in rest[i] for i in range(len(rest)))
+            for p in first.tolist()
         ):
             continue
-        score = 0.0
+        score = 0 if micros else 0.0
         for t in sorted(set(terms)):
             _, tf, dl = per_term[terms.index(t)][d]
-            score += idfs[t] * (tf * (codec.BM25_K1 + 1.0)) / (
+            c = idfs[t] * (tf * (codec.BM25_K1 + 1.0)) / (
                 tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
             )
-        out.append((score, d))
+            score += _micros(c) if micros else c
+        out.append((score, d, None))
     out.sort(key=lambda x: (-x[0], x[1]))
     return out[:k]
 
@@ -889,53 +709,27 @@ def wand_topk(
     n_buckets: int = DEFAULT_N_BUCKETS,
     phrase: bool = False,
 ) -> DataFrame:
-    """Distributed block-max WAND: partition-pruned segment scan → per-shard
-    WAND heap in applyInPandas → global TakeOrderedAndProject merge.
+    """Segment-served BM25 top-k with urls and ranks: the shared driver
+    plan (``_pruned_topk``) with float scores from the block-max executor
+    (``_blockmax_seg_shard``) → url join → rank. Scores are bit-identical
+    to ``query.search_bm25`` (both fold terms in sorted order).
 
     With ``phrase=True`` the per-shard executor first restricts to docs where
     the terms are position-adjacent (decoded from the positions blobs), then
     scores those docs exactly — same semantics as query.search_bm25's
     positional phrase mode, but served entirely from the compressed index."""
-    raw_terms = list(query_terms)  # full sequence — phrase adjacency needs dups
-    terms = list(dict.fromkeys(raw_terms))
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
-    # one tiny job fetches idf AND write-bucket per query term
-    idf_rows = (
-        lexicon.join(F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string")), "term")
-        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    idfs = {r["term"]: r["idf_bm25"] for r in idf_rows}
-    if not idfs or (phrase and any(t not in idfs for t in terms)):
-        # phrase semantics: a term absent from the lexicon makes the exact
-        # phrase unmatchable (index/query stem mismatch, quirk Q2, can cause
-        # this even for phrases present in raw text — reference-faithful)
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
-    buckets = sorted({int(r["bucket"]) for r in idf_rows})
-
-    pruned = segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
-
-    ordered_terms = raw_terms
-
-    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        term_blocks: dict[str, list[dict]] = {}
-        for row in pdf.to_dict("records"):
-            term_blocks.setdefault(row["term"], []).append(row)
-        if phrase and len(ordered_terms) >= 2:
-            ptop = _phrase_topk_in_shard(term_blocks, ordered_terms, idfs, avgdl, k)
-            return pd.DataFrame(
-                [(int(d), float(s)) for s, d in ptop], columns=["doc_id", "score"]
-            ).astype({"doc_id": "int64", "score": "float64"})
-        top = _wand_shard(term_blocks, idfs, avgdl, k)
-        return pd.DataFrame(
-            [(int(d), float(s)) for s, d, _ in top], columns=["doc_id", "score"]
-        )
-
-    per_shard = pruned.groupBy("shard").applyInPandas(run_shard, "doc_id long, score double")
-    ranked = per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     from pyspark.sql import Window
 
+    terms = list(query_terms)  # full sequence — phrase adjacency needs dups
+    shard_fn = (
+        partial(_phrase_micros_in_shard, terms=terms)
+        if phrase and len(terms) >= 2
+        else _blockmax_seg_shard
+    )
+    ranked = _pruned_topk(
+        spark, segments, lexicon, terms, avgdl, k, n_buckets, shard_fn,
+        micros=False, require_all=phrase,
+    )
     return (
         ranked.join(documents.select("doc_id", "url"), "doc_id", "left")
         .select(
@@ -955,44 +749,46 @@ def wand_topk(
     )
 
 
+def _contrib(tfs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float, micros: bool):
+    """One term's BM25 contributions: ``codec.bm25_contrib`` (the formula
+    and operation order of the encode's block maxima and of every oracle),
+    rounded to bigint micros when ``micros``."""
+    c = codec.bm25_contrib(tfs, dls, idf, avgdl)
+    return np.floor(c * 1e6 + 0.5).astype(np.int64) if micros else c
+
+
+def _sum_by_doc(docs: np.ndarray, cons: np.ndarray, micros: bool):
+    """Per-doc score sums of (doc, contribution) pairs. ``np.bincount``
+    adds weights in array order, so pairs concatenated in sorted-term order
+    give each doc the sorted-term float fold (from 0.0) of the oracle;
+    micros are < 2^27 each, so their float64 sums are exact."""
+    u, inv = np.unique(docs, return_inverse=True)
+    sc = np.bincount(inv, weights=cons.astype(np.float64))
+    return u, (sc.astype(np.int64) if micros else sc)
+
+
 def _exhaustive_seg_shard(
     term_blocks: dict[str, list[dict]],
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    threshold: float = float("-inf"),
     micros: bool = False,
 ) -> list[tuple[float, int, None]]:
     """Exhaustive segment-served scorer: decode EVERY block of every query
     term, score all postings vectorized (numpy), one bincount aggregate,
-    top-k. The no-skipping baseline the block-max executors are measured
-    against — same decode path, same vectorized style, so the timing
+    top-k. The no-skipping baseline the block-max executor is measured and
+    tested against — same decode path, same vectorized style, so the timing
     difference is the pruning, not the execution engine."""
     doc_list: list[np.ndarray] = []
     con_list: list[np.ndarray] = []
-    for t, bl in term_blocks.items():
-        idf = idfs[t]
-        for b in bl:
+    for t in sorted(term_blocks):
+        for b in term_blocks[t]:
             ids, tfs, dls = codec.decode_block(b)
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            c = (idf * (tf * (codec.BM25_K1 + 1.0))) / (
-                tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
-            )
-            con_list.append(
-                np.floor(c * 1e6 + 0.5).astype(np.int64) if micros else c
-            )
+            con_list.append(_contrib(tfs, dls, idfs[t], avgdl, micros))
             doc_list.append(ids.astype(np.int64))
     if not doc_list:
         return []
-    docs = np.concatenate(doc_list)
-    cons = np.concatenate(con_list)
-    u, inv = np.unique(docs, return_inverse=True)
-    # float64 weights are exact here: micro contributions are < 2^27 each
-    # and a query sums a handful of terms — far below 2^53
-    sc = np.bincount(inv, weights=cons.astype(np.float64)).astype(
-        np.int64 if micros else np.float64
-    )
+    u, sc = _sum_by_doc(np.concatenate(doc_list), np.concatenate(con_list), micros)
     sel = np.lexsort((u, -sc))[:k]
     return [(sc[i].item(), int(u[i]), None) for i in sel]
 
@@ -1002,20 +798,19 @@ def _blockmax_seg_shard(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    threshold: float = float("-inf"),
     micros: bool = False,
 ) -> list[tuple[float, int, None]]:
-    """Vectorized block-max pruning (interval sweep): doc-at-a-time WAND
-    is exact but pays an interpreted-Python loop per posting — at bench
-    scale that costs more than it skips. Here pruning happens at BLOCK
-    granularity and scoring stays vectorized:
+    """THE BM25 executor: vectorized block-max pruning (interval sweep,
+    Ding & Suel SIGIR 2011 at block granularity). A doc-at-a-time loop pays
+    interpreted Python per posting — more than it skips — so here pruning
+    happens at BLOCK granularity and scoring stays vectorized:
 
     1. block boundaries of all query terms partition doc-id space into
        elementary intervals; each interval's upper bound is the sum of the
        covering blocks' block-max scores;
     2. intervals process in descending-UB order — the top-k threshold θ
        rises fastest, and once the next UB < θ NO remaining interval can
-       contain a top-k doc (exact early exit, same bound argument as WAND);
+       contain a top-k doc (exact early exit);
     3. surviving intervals decode only their covering blocks (cached) and
        score all their postings vectorized (bincount per interval — each
        doc lives in exactly one interval, so scores never split).
@@ -1030,22 +825,23 @@ def _blockmax_seg_shard(
     fills with rare-term docs — the standard head/tail split of block-max
     pruning, done at decode granularity.
 
-    Bit-identical to the exhaustive scorer / columnar BM25 under
-    ``micros=True`` (UB comparisons use ``>= θ`` so equal-score smaller
-    doc-id ties are never pruned)."""
-    import heapq
-
-    terms = [t for t, bl in term_blocks.items() if bl]
+    Exactness, in both modes, with no epsilon. A doc's score and an
+    interval's UB both fold their terms in sorted-term order from zero —
+    the order of ``query.search_bm25`` and ``tests/oracle.py``, so float
+    scores are bit-identical to them. With ``micros=True`` every sum is an
+    exact integer. With floats the bound is still safe: IEEE addition is
+    monotone (a ≤ a', b ≤ b' ⇒ fl(a+b) ≤ fl(a'+b')), each term's bound is
+    ≥ its contribution to any doc of the interval, and a term the doc lacks
+    adds a bound ≥ 0 — so, term by term, every partial UB is ≥ the doc's
+    partial score. The one condition: each stored ``block_max_score`` is ≥
+    every contribution in its block under the query's idf and avgdl — true
+    when the segments were encoded with the serving statistics, as
+    ``build_index`` and ``gate_index`` do (same formula, ``_contrib``). UB
+    comparisons use ``< θ`` to prune, so an equal-score smaller doc id can
+    still displace the kth."""
+    terms = sorted(t for t, bl in term_blocks.items() if bl)
     if not terms:
         return []
-
-    def contrib(t: str, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        tf = tfs.astype(np.float64)
-        dl = dls.astype(np.float64)
-        c = (idfs[t] * (tf * (codec.BM25_K1 + 1.0))) / (
-            tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl)
-        )
-        return np.floor(c * 1e6 + 0.5).astype(np.int64) if micros else c
 
     _EAGER_BLOCKS = 32
     eager: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -1057,7 +853,7 @@ def _blockmax_seg_shard(
             ids = np.concatenate([p[0] for p in parts]).astype(np.int64)
             tfs = np.concatenate([p[1] for p in parts])
             dls = np.concatenate([p[2] for p in parts])
-            eager[t] = (ids, contrib(t, tfs, dls))
+            eager[t] = (ids, _contrib(tfs, dls, idfs[t], avgdl, micros))
             continue
         his = np.array([b["skip_doc_id"] for b in bl], dtype=np.int64)
         los = np.empty_like(his)
@@ -1074,11 +870,11 @@ def _blockmax_seg_shard(
     if not binfo:
         # every term eager (small shard / rare-only query): plain
         # vectorized exhaustive over the already-decoded arrays
-        docs = np.concatenate([v[0] for v in eager.values()])
-        cons = np.concatenate([v[1] for v in eager.values()])
-        u, inv = np.unique(docs, return_inverse=True)
-        sc = np.bincount(inv, weights=cons.astype(np.float64))
-        sc = sc.astype(np.int64) if micros else sc
+        u, sc = _sum_by_doc(
+            np.concatenate([eager[t][0] for t in terms]),
+            np.concatenate([eager[t][1] for t in terms]),
+            micros,
+        )
         sel = np.lexsort((u, -sc))[:k]
         return [(sc[i].item(), int(u[i]), None) for i in sel]
 
@@ -1091,21 +887,22 @@ def _blockmax_seg_shard(
     prev[1:] = bounds[:-1]
     ub = np.zeros(len(bounds), dtype=np.int64 if micros else np.float64)
     cover = {}
-    for t, (los, his, bm, bl) in binfo.items():
-        idx = np.searchsorted(his, bounds)  # block whose hi >= interval end
-        valid = idx < len(his)
-        safe = np.minimum(idx, len(his) - 1)
-        c = valid & (los[safe] < bounds)  # boundaries never straddle blocks
-        ub[c] += bm[idx[c]]
-        cover[t] = (idx, c)
-    for t, (ids, con) in eager.items():
-        if not len(ids):
-            continue
-        # exact per-interval max contribution (interval of doc d: the
-        # first bound >= d, since intervals are (prev, bound])
-        iv = np.searchsorted(bounds, ids, side="left")
-        starts = np.flatnonzero(np.r_[True, iv[1:] != iv[:-1]])
-        ub[iv[starts]] += np.maximum.reduceat(con, starts)
+    for t in terms:  # sorted-term fold — see the exactness note
+        if t in binfo:
+            los, his, bm, _ = binfo[t]
+            idx = np.searchsorted(his, bounds)  # block whose hi >= interval end
+            valid = idx < len(his)
+            safe = np.minimum(idx, len(his) - 1)
+            c = valid & (los[safe] < bounds)  # boundaries never straddle blocks
+            ub[c] += bm[idx[c]]
+            cover[t] = (idx, c)
+        else:
+            ids, con = eager[t]
+            # exact per-interval max contribution (interval of doc d: the
+            # first bound >= d, since intervals are (prev, bound])
+            iv = np.searchsorted(bounds, ids, side="left")
+            starts = np.flatnonzero(np.r_[True, iv[1:] != iv[:-1]])
+            ub[iv[starts]] += np.maximum.reduceat(con, starts)
 
     order = np.argsort(-ub, kind="stable")
     heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of top-k
@@ -1119,36 +916,31 @@ def _blockmax_seg_shard(
             break
         lo, hi = int(prev[ii]), int(bounds[ii])
         doc_list, con_list = [], []
-        for t, (ids, con) in eager.items():
-            s = int(np.searchsorted(ids, lo, side="right"))
-            e = int(np.searchsorted(ids, hi, side="right"))
-            if s < e:
-                doc_list.append(ids[s:e])
-                con_list.append(con[s:e])
-        for t, (los, his, bm, bl) in binfo.items():
+        for t in terms:  # sorted-term order → the oracle's float fold
+            if t in eager:
+                ids, con = eager[t]
+                s = int(np.searchsorted(ids, lo, side="right"))
+                e = int(np.searchsorted(ids, hi, side="right"))
+                if s < e:
+                    doc_list.append(ids[s:e])
+                    con_list.append(con[s:e])
+                continue
             idx_t, c_t = cover[t]
             if not c_t[ii]:
                 continue
-            bj = int(idx_t[ii])
-            key = (t, bj)
+            key = (t, int(idx_t[ii]))
             got = decoded.get(key)
             if got is None:
-                got = codec.decode_block(bl[bj])
-                decoded[key] = got
+                got = decoded[key] = codec.decode_block(binfo[t][3][key[1]])
             ids, tfs, dls = got
             s = int(np.searchsorted(ids, lo, side="right"))
             e = int(np.searchsorted(ids, hi, side="right"))
-            if s == e:
-                continue
-            con_list.append(contrib(t, tfs[s:e], dls[s:e]))
-            doc_list.append(ids[s:e].astype(np.int64))
+            if s < e:
+                doc_list.append(ids[s:e].astype(np.int64))
+                con_list.append(_contrib(tfs[s:e], dls[s:e], idfs[t], avgdl, micros))
         if not doc_list:
             continue
-        docs = np.concatenate(doc_list)
-        cons = np.concatenate(con_list)
-        u, inv = np.unique(docs, return_inverse=True)
-        sc = np.bincount(inv, weights=cons.astype(np.float64))
-        sc = sc.astype(np.int64) if micros else sc
+        u, sc = _sum_by_doc(np.concatenate(doc_list), np.concatenate(con_list), micros)
         for d, s_ in zip(u.tolist(), sc.tolist()):
             item = (s_, -d)
             if len(heap) < k:
@@ -1156,71 +948,6 @@ def _blockmax_seg_shard(
             elif item > heap[0]:
                 heapq.heappushpop(heap, item)
     return [(s_, -nd, None) for s_, nd in sorted(heap, reverse=True)]
-
-
-def _pruned_topk_micros(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int,
-    n_buckets: int,
-    shard_fn,
-) -> DataFrame:
-    """Shared driver plan of the dynamic-pruning executors: one tiny |q|-row
-    lexicon lookup (idf + bucket) → bucket-partition-pruned segment scan →
-    per-shard integer heap (``shard_fn`` = _wand_shard or _maxscore_shard,
-    applyInPandas) → global TakeOrderedAndProject merge of ≤ k rows per
-    shard. ONE definition so a pruning-predicate or fast-path fix can never
-    apply to one executor and silently miss the other."""
-    terms = list(dict.fromkeys(query_terms))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score_micros long")
-    idf_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", "idf_bm25", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    idfs = {r["term"]: r["idf_bm25"] for r in idf_rows}
-    if not idfs:
-        return spark.createDataFrame([], "doc_id long, score_micros long")
-    buckets = sorted({int(r["bucket"]) for r in idf_rows})
-    pruned = segments.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(idfs)))
-
-    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        term_blocks: dict[str, list[dict]] = {}
-        for row in pdf.to_dict("records"):
-            term_blocks.setdefault(row["term"], []).append(row)
-        top = shard_fn(term_blocks, idfs, avgdl, k, micros=True)
-        return pd.DataFrame(
-            [(int(d), int(s)) for s, d, _ in top], columns=["doc_id", "score_micros"]
-        ).astype({"doc_id": "int64", "score_micros": "int64"})
-
-    per_shard = pruned.groupBy("shard").applyInPandas(
-        run_shard, "doc_id long, score_micros long"
-    )
-    return per_shard.orderBy(F.desc("score_micros"), F.asc("doc_id")).limit(k)
-
-
-def wand_topk_micros(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-) -> DataFrame:
-    """Block-max WAND returning exact **bigint-micros** scores:
-    (doc_id, score_micros), bit-identical to the columnar
-    ``sum(round(contrib*1e6))`` BM25 — the compressed physical path under the
-    same DuckDB oracle as the columnar one (plan: _pruned_topk_micros)."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _wand_shard
-    )
-
-
 
 
 def blockmax_topk_micros(
@@ -1232,12 +959,12 @@ def blockmax_topk_micros(
     k: int = 10,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Vectorized block-max pruning (interval sweep, ``_blockmax_seg_shard``)
-    returning exact bigint-micros scores — the third dynamic-pruning
-    executor beside WAND/MaxScore, same shared plan and DuckDB oracle."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
-        _blockmax_seg_shard,
+    """BM25 top-k from the block-max executor (``_blockmax_seg_shard``)
+    over the shared driver plan, in exact bigint micros: (doc_id,
+    score_micros), bit-identical to the columnar ``sum(round(contrib*1e6))``
+    BM25 — the compressed physical path under the same DuckDB oracle."""
+    return _pruned_topk(
+        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _blockmax_seg_shard
     )
 
 
@@ -1252,28 +979,9 @@ def seg_exhaustive_topk_micros(
 ) -> DataFrame:
     """Exhaustive segment-served BM25 (``_exhaustive_seg_shard``): decode
     and score every block, no pruning — the same-engine baseline the
-    block-max executors are benched against (bench.py --vocab-datum)."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets,
-        _exhaustive_seg_shard,
-    )
-
-
-def maxscore_topk_micros(
-    spark: SparkSession,
-    segments: DataFrame,
-    lexicon: DataFrame,
-    query_terms: list[str],
-    avgdl: float,
-    k: int = 10,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-) -> DataFrame:
-    """MaxScore dynamic pruning returning exact **bigint-micros** scores:
-    (doc_id, score_micros) — the second early-termination serve path beside
-    block-max WAND, same shared plan (_pruned_topk_micros) and the same
-    DuckDB oracle as the columnar BM25."""
-    return _pruned_topk_micros(
-        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _maxscore_shard
+    block-max executor is benched against (bench.py --vocab-datum)."""
+    return _pruned_topk(
+        spark, segments, lexicon, query_terms, avgdl, k, n_buckets, _exhaustive_seg_shard
     )
 
 
@@ -1473,55 +1181,6 @@ def bitpacked_postings_roundtrip(docs: DataFrame, shard_span: int = 64) -> DataF
     return seg.mapInPandas(dec, "term string, doc_id long, tf long")
 
 
-def _phrase_micros_in_shard(
-    term_blocks: dict[str, list[dict]],
-    terms: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-) -> list[tuple[int, int, None]]:
-    """Exact phrase top-k within one shard in **bigint micros**: the
-    _phrase_topk_in_shard candidate logic (position adjacency over decoded
-    blocks) with each term contribution rounded to micros BEFORE the sum —
-    the same integer contract as _wand_shard, so the segments-served phrase
-    ranking hash-matches the columnar phrase_topk oracle."""
-    per_term: list[dict[int, tuple]] = []
-    for t in terms:
-        blocks = term_blocks.get(t)
-        if not blocks:
-            return []
-        entry: dict[int, tuple] = {}
-        for b in sorted(blocks, key=lambda x: x["block_id"]):
-            ids, tfs, dls = codec.decode_block(b)
-            poss = codec.decode_positions(b)
-            for d, p, tf, dl in zip(ids.tolist(), poss, tfs.tolist(), dls.tolist()):
-                entry[d] = (p, tf, dl)
-        per_term.append(entry)
-    cand = set(per_term[0])
-    for pm in per_term[1:]:
-        cand &= set(pm)
-    out: list[tuple[int, int, None]] = []
-    for d in cand:
-        first, _, _ = per_term[0][d]
-        rest = [set(pm[d][0].tolist()) for pm in per_term[1:]]
-        if not any(
-            all((p + i + 1) in rest[i] for i in range(len(rest)))
-            for p in first.tolist()
-        ):
-            continue
-        score = 0
-        for t in sorted(set(terms)):
-            _, tf, dl = per_term[terms.index(t)][d]
-            score += _micros(
-                idfs[t]
-                * (tf * (codec.BM25_K1 + 1.0))
-                / (tf + codec.BM25_K1 * (1.0 - codec.BM25_B + codec.BM25_B * dl / avgdl))
-            )
-        out.append((score, d, None))
-    out.sort(key=lambda x: (-x[0], x[1]))
-    return out[:k]
-
-
 def phrase_topk_micros(
     spark: SparkSession,
     segments: DataFrame,
@@ -1532,18 +1191,46 @@ def phrase_topk_micros(
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Scored phrase query served ENTIRELY from the compressed segments
-    (positions decoded from the blobs, adjacency checked in-shard, BM25 in
-    exact micros) — the physical twin of serve.phrase_topk, under the same
-    DuckDB oracle. Shares _pruned_topk_micros' driver plan with WAND and
-    MaxScore, so partition pruning and the bounded per-shard heap are one
-    definition across all three."""
+    (positions decoded from the blobs, adjacency checked in-shard by
+    ``_phrase_micros_in_shard``, BM25 in exact micros) — the physical twin
+    of serve.phrase_topk, under the same DuckDB oracle. Runs on the driver
+    plan every segment executor shares (``_pruned_topk``), so partition
+    pruning and the bounded per-shard heap are one definition."""
     ordered = list(phrase_terms)
+    return _pruned_topk(
+        spark, segments, lexicon, ordered, avgdl, k, n_buckets,
+        partial(_phrase_micros_in_shard, terms=ordered), require_all=True,
+    )
 
-    def shard_fn(term_blocks, idfs, avgdl_, k_, micros=True):
-        return _phrase_micros_in_shard(term_blocks, ordered, idfs, avgdl_, k_)
 
-    return _pruned_topk_micros(
-        spark, segments, lexicon, ordered, avgdl, k, n_buckets, shard_fn
+def _proximity_segments(
+    spark: SparkSession,
+    segments: DataFrame,
+    lexicon: DataFrame,
+    term_a: str,
+    term_b: str,
+    n_buckets: int,
+    col: str,
+    dist,
+) -> DataFrame:
+    """Shared body of the proximity pair: the shared driver plan over both
+    terms, positions decoded in-shard, and ``dist(pos_a, pos_b)`` → the
+    doc's distance, or None when no position pair qualifies. A doc's pair
+    work is bounded by its two term frequencies."""
+
+    def shard_fn(term_blocks: dict[str, list[dict]], idfs) -> pd.DataFrame:
+        pa = _decode_term(term_blocks.get(term_a, []))
+        pb = _decode_term(term_blocks.get(term_b, []))
+        out = []
+        for d in set(pa) & set(pb):
+            m = dist(pa[d][0].astype(np.int64), pb[d][0].astype(np.int64))
+            if m is not None:
+                out.append((d, m))
+        return pd.DataFrame(out, columns=["doc_id", col]).astype("int64")
+
+    return _shard_plan(
+        spark, segments, lexicon, [term_a, term_b], n_buckets, shard_fn,
+        f"doc_id long, {col} long", require_all=True,
     )
 
 
@@ -1558,43 +1245,15 @@ def proximity_match_segments(
 ) -> DataFrame:
     """Proximity search served ENTIRELY from the compressed segments:
     (doc_id, min_dist) for docs where the two terms occur within ``slop``
-    raw-split positions, positions decoded from the blobs in-shard — the
-    physical twin of serve.proximity_match under the same oracle. Same
-    bucket-pruned scan + per-shard Arrow group as the phrase/WAND family;
-    a doc's pair work is bounded by its two term frequencies."""
-    terms = list(dict.fromkeys([term_a, term_b]))
-    lex_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    present = {r["term"] for r in lex_rows}
-    if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_dist long")
-    buckets = sorted({int(r["bucket"]) for r in lex_rows})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    raw-split positions — the physical twin of serve.proximity_match under
+    the same oracle."""
 
-    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
-        for row in pdf.to_dict("records"):
-            entry = per_term[row["term"]]
-            ids, _, _ = codec.decode_block(row)
-            poss = codec.decode_positions(row)
-            for d, p in zip(ids.tolist(), poss):
-                entry[d] = p
-        pa, pb = per_term[term_a], per_term[term_b]
-        out = []
-        for d in set(pa) & set(pb):
-            md = int(np.abs(pa[d][:, None].astype(np.int64)
-                            - pb[d][None, :].astype(np.int64)).min())
-            if md <= slop:
-                out.append((d, md))
-        return pd.DataFrame(out, columns=["doc_id", "min_dist"]).astype("int64")
+    def dist(pa: np.ndarray, pb: np.ndarray) -> int | None:
+        md = int(np.abs(pa[:, None] - pb[None, :]).min())
+        return md if md <= slop else None
 
-    return pruned.groupBy("shard").applyInPandas(
-        run_shard, "doc_id long, min_dist long"
+    return _proximity_segments(
+        spark, segments, lexicon, term_a, term_b, n_buckets, "min_dist", dist
     )
 
 
@@ -1609,40 +1268,14 @@ def ordered_proximity_segments(
 ) -> DataFrame:
     """Ordered proximity (a BEFORE b within ``slop``) served from the
     compressed segments — (doc_id, min_gap), gap = pb − pa ≥ 1 — the
-    directional sibling of :func:`proximity_match_segments`, same shard
-    shape, same oracle as the columnar ordered_proximity_match."""
-    terms = list(dict.fromkeys([term_a, term_b]))
-    lex_rows = (
-        lexicon.filter(F.col("term").isin(terms))
-        .select("term", F.pmod(F.hash("term"), F.lit(n_buckets)).alias("bucket"))
-        .collect()
-    )
-    present = {r["term"] for r in lex_rows}
-    if term_a not in present or term_b not in present:
-        return spark.createDataFrame([], "doc_id long, min_gap long")
-    buckets = sorted({int(r["bucket"]) for r in lex_rows})
-    pruned = segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    directional sibling of :func:`proximity_match_segments`, same oracle as
+    the columnar ordered_proximity_match."""
 
-    def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
-        for row in pdf.to_dict("records"):
-            entry = per_term[row["term"]]
-            ids, _, _ = codec.decode_block(row)
-            poss = codec.decode_positions(row)
-            for d, p in zip(ids.tolist(), poss):
-                entry[d] = p
-        pa, pb = per_term[term_a], per_term[term_b]
-        out = []
-        for d in set(pa) & set(pb):
-            gaps = (pb[d][None, :].astype(np.int64)
-                    - pa[d][:, None].astype(np.int64)).reshape(-1)
-            gaps = gaps[gaps >= 1]
-            if gaps.size and int(gaps.min()) <= slop:
-                out.append((d, int(gaps.min())))
-        return pd.DataFrame(out, columns=["doc_id", "min_gap"]).astype("int64")
+    def dist(pa: np.ndarray, pb: np.ndarray) -> int | None:
+        gaps = (pb[None, :] - pa[:, None]).reshape(-1)
+        gaps = gaps[gaps >= 1]
+        return int(gaps.min()) if gaps.size and int(gaps.min()) <= slop else None
 
-    return pruned.groupBy("shard").applyInPandas(
-        run_shard, "doc_id long, min_gap long"
+    return _proximity_segments(
+        spark, segments, lexicon, term_a, term_b, n_buckets, "min_gap", dist
     )

@@ -1864,42 +1864,17 @@ def hybrid_rrf_topk(
     )
 
 
-def bm25_topk_wand(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """BM25 top-k via block-max WAND over the compressed segments —
-    (doc_id, score_micros), hash-identical to ``bm25_topk`` (same DuckDB
-    oracle): scoring inside WAND runs in integer micros (each term
-    contribution rounded exactly as the column expression does), so pruning
-    thresholds and final scores are exact integers on any engine."""
-    from searchengine_spark.operators.segments import wand_topk_micros
-
-    return wand_topk_micros(
-        spark, idx["segments"], idx["lexicon"], query_terms, idx["avgdl"], k=k
-    )
-
-
-def bm25_topk_maxscore(
-    spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
-) -> DataFrame:
-    """BM25 top-k via MaxScore dynamic pruning over the compressed segments
-    — the second early-termination executor beside WAND, hash-identical to
-    ``bm25_topk`` (same DuckDB oracle, same integer-micros contract)."""
-    from searchengine_spark.operators.segments import maxscore_topk_micros
-
-    return maxscore_topk_micros(
-        spark, idx["segments"], idx["lexicon"], query_terms, idx["avgdl"], k=k
-    )
-
-
 def bm25_topk_blockmax(
     spark: SparkSession, idx: dict, query_terms: list[str], k: int = 10
 ) -> DataFrame:
-    """BM25 top-k via VECTORIZED block-max pruning (interval sweep) over
-    the compressed segments — doc-at-a-time WAND pays an interpreted loop
-    per posting, so in a Python executor pruning must happen at block
-    granularity with numpy scoring to actually pay off. Hash-identical to
-    ``bm25_topk`` (same oracle, same integer-micros contract)."""
+    """BM25 top-k over the compressed segments — (doc_id, score_micros)
+    from ``segments.blockmax_topk_micros``, the one segment-served BM25
+    executor (vectorized block-max pruning, interval sweep; a doc-at-a-time
+    loop pays an interpreted step per posting, so in a Python executor
+    pruning happens at block granularity with numpy scoring). Serves the
+    ``bm25_topk_wand``, ``bm25_topk_maxscore`` and ``bm25_topk_blockmax``
+    gates; hash-identical to ``bm25_topk`` (same oracle, same
+    integer-micros contract)."""
     from searchengine_spark.operators.segments import blockmax_topk_micros
 
     return blockmax_topk_micros(

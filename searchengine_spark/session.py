@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Defaults are tuned for the sandbox (local[N], 32 cores, 128 GiB) but every
-knob is the one you would also set on a 1000-executor cluster:
+Cores and driver heap default from the host (``os.cpu_count()``, a share
+of ``MemAvailable``), and every knob is the one you would also set on a
+1000-executor cluster:
 
 - AQE on (runtime coalesce + skew-join splitting),
 - shuffle partitions sized to parallelism (not the 200 default),
@@ -17,7 +18,11 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+
+# default driver heap: this share of MemAvailable, never above the cap
+_HEAP_FRACTION = 0.4
+_HEAP_CAP_MB = 16 * 1024
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,6 +54,32 @@ def _export_pythonpath() -> None:
     # reintroduces the same storm on Arrow-heavy stages (segment encode) —
     # route Arrow through the (now pinned) system allocator instead.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+
+
+def _default_driver_memory(meminfo: str | None = None) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: 40% of
+    ``MemAvailable`` (``/proc/meminfo``; physical RAM where that file is
+    missing), capped at 16g. A fixed heap larger than the host makes the
+    JVM fail at start (``mmap failed``), and a heap near all of RAM leaves
+    nothing for the Python workers. ``meminfo`` is the file's text (read
+    from the host when None)."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    avail = next(
+        (
+            int(line.split()[1]) * 1024
+            for line in meminfo.splitlines()
+            if line.startswith("MemAvailable:")
+        ),
+        None,
+    )
+    if avail is None:
+        avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_HEAP_CAP_MB, int(avail * _HEAP_FRACTION) >> 20)}m"
 
 
 _PYFILE_SENT: set[str] = set()
@@ -94,7 +125,8 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    pinned_mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    driver_mem = pinned_mem or _default_driver_memory()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -115,14 +147,17 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
         )
         .config("spark.driver.memory", driver_mem)
-        # -Xms == -Xmx + AlwaysPreTouch: fault the whole heap in at session
-        # startup (untimed) instead of per-stage — 32 task threads first-
-        # touching fresh heap pages mid-build showed up as 60-90% SYS time
-        # (page-fault + TLB-shootdown storm). THP-madvise the heap so the
-        # kernel serves it with 2 MB pages (fewer faults, smaller TLB).
+        # An explicit SPARK_DRIVER_MEMORY also pins -Xms == -Xmx (+
+        # AlwaysPreTouch): fault the whole heap in at session startup
+        # (untimed) instead of per-stage — 32 task threads first-touching
+        # fresh heap pages mid-build showed up as 60-90% SYS time (page-fault
+        # + TLB-shootdown storm). The host-sized default grows on demand.
+        # THP-madvise the heap so the kernel serves it with 2 MB pages
+        # (fewer faults, smaller TLB).
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+UseTransparentHugePages"
+            (f"-Xms{driver_mem} " if pinned_mem else "")
+            + "-XX:+UseTransparentHugePages"
             + (" -XX:+AlwaysPreTouch" if os.environ.get("SPARK_PRETOUCH") else ""),
         )
         # Sandbox corpora are ~100 MB, so the default 128 MB split size packs
@@ -132,6 +167,11 @@ def get_spark(
         # matters when total input < cores * 128 MB.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # every SQL execution renders its plan string for the listener bus,
+        # UI or not; a compaction that folds persisted generations through
+        # repeated merges prints each cached subtree once per reference, and
+        # the unbounded string exhausted a 6 GB driver heap — cap it
+        .config("spark.sql.maxPlanStringLength", str(16 << 20))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

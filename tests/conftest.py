@@ -13,7 +13,8 @@ sys.path.insert(0, REPO)
 def spark():
     from searchengine_spark.session import get_spark
 
-    s = get_spark(master="local[8]", app_name="tests", shuffle_partitions=8)
+    # master defaults to local[$SPARK_GRAFT_CPUS] (else the host's cores)
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

@@ -122,15 +122,28 @@ def test_serve_bm25_prunes_and_broadcasts(spark):
 
 
 def test_serve_wand_prunes_buckets(spark):
+    """Both segment-served top-k entry points — the micros gate path and
+    the float library path ``segments.wand_topk`` — run the shared driver
+    plan: bucket-pruned segment scan and a bounded top-k merge."""
     from searchengine_spark.operators import serve
+    from searchengine_spark.operators.segments import wand_topk
     from searchengine_spark.plans.gate_index import gate_index
+    from searchengine_spark.sources.tables import load_table
 
     idx = gate_index(spark, SF_DIR)
-    plan = plan_of(serve.bm25_topk_wand(spark, idx, ["spark", "hash"], k=10))
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters")[1].split("\n")[0]
-    assert "bucket" in pf
-    assert "TakeOrderedAndProject" in plan
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", F.col("source").alias("url")
+    )
+    terms = ["spark", "hash"]
+    for df in (
+        serve.bm25_topk_blockmax(spark, idx, terms, k=10),
+        wand_topk(spark, idx["segments"], idx["lexicon"], docs, terms, idx["avgdl"], k=10),
+    ):
+        plan = plan_of(df)
+        assert "PartitionFilters" in plan
+        pf = plan.split("PartitionFilters")[1].split("\n")[0]
+        assert "bucket" in pf
+        assert "TakeOrderedAndProject" in plan
 
 
 def test_candidates_pushes_term_filter(spark, tmp_path):

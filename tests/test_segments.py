@@ -1,5 +1,5 @@
-"""Segment path end-to-end: WAND over compressed segments must equal the
-uncompressed BM25 join path (and hence the oracle) bit-for-bit."""
+"""Segment path end-to-end: block-max top-k over compressed segments must
+equal the uncompressed BM25 join path (and hence the oracle) bit-for-bit."""
 
 from __future__ import annotations
 
@@ -116,7 +116,7 @@ def test_wand_phrase_equals_join_path(spark, index, query):
 def test_wand_phrase_repeated_term(spark, index):
     """Repeated-term phrase must use the FULL term sequence for adjacency —
     dedup-before-adjacency would match the shortened phrase (review finding)."""
-    from searchengine_spark.operators.segments import _phrase_topk_in_shard
+    from searchengine_spark.operators.segments import _phrase_micros_in_shard
     import numpy as np
     from searchengine_spark.operators import codec
 
@@ -132,8 +132,10 @@ def test_wand_phrase_repeated_term(spark, index):
         return bl
 
     term_blocks = {"spark": blocks_for({1: [0, 1], 2: [0, 2]})}
-    got = _phrase_topk_in_shard(term_blocks, ["spark", "spark"], {"spark": 1.0}, 10.0, 10)
-    assert [d for _, d in got] == [1]  # only doc 1 has adjacent repeat
+    got = _phrase_micros_in_shard(
+        term_blocks, {"spark": 1.0}, 10.0, 10, micros=False, terms=["spark", "spark"]
+    )
+    assert [d for _, d, _ in got] == [1]  # only doc 1 has adjacent repeat
 
     # and via the public API on the real index: "index index" (never adjacent)
     got2 = wand_topk(

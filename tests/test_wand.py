@@ -1,4 +1,5 @@
-"""Block-max WAND == brute-force top-k (property, SURVEY.md §5.2)."""
+"""The block-max executor == brute-force top-k (property, SURVEY.md §5.2):
+bit-identical floats, exact micros, and safe pruning under score ties."""
 
 from __future__ import annotations
 
@@ -7,19 +8,26 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchengine_spark.operators import codec
-from searchengine_spark.operators.segments import _wand_shard
+from searchengine_spark.operators.segments import (
+    _blockmax_seg_shard,
+    _exhaustive_seg_shard,
+    _micros,
+)
+
+IDFS = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0, "eps": 1.9}
+AVGDL = 80.0
 
 
-def brute_force(term_postings, idfs, avgdl, k):
+def brute_force(term_postings, idfs, avgdl, k, micros=False):
     scores: dict[int, list[tuple[str, float]]] = {}
     for term, posts in term_postings.items():
         for doc_id, tf, dl in posts:
             c = codec.bm25_contrib(np.array([tf]), np.array([dl]), idfs[term], avgdl)[0]
-            scores.setdefault(doc_id, []).append((term, float(c)))
+            scores.setdefault(doc_id, []).append((term, _micros(c) if micros else float(c)))
     out = []
     for doc_id, contribs in scores.items():
         contribs.sort()
-        s = 0.0
+        s = 0 if micros else 0.0
         for _, c in contribs:
             s += c
         out.append((s, doc_id))
@@ -27,28 +35,8 @@ def brute_force(term_postings, idfs, avgdl, k):
     return out[:k]
 
 
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_wand_equals_bruteforce(term_postings, k):
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
+def term_blocks_of(term_postings, block_size):
+    """Encode each term's postings into one shard's segment blocks."""
     term_blocks = {}
     for term, posts in term_postings.items():
         posts = sorted(posts)
@@ -56,86 +44,107 @@ def test_wand_equals_bruteforce(term_postings, k):
         tfs = np.array([p[1] for p in posts], dtype=np.uint64)
         dls = np.array([p[2] for p in posts], dtype=np.uint64)
         blocks = codec.encode_blocks(
-            ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl, block_size=16
-        )
-        for i, b in enumerate(blocks):
-            b["bucket"] = 0
-            b["shard"] = 0
-            b["term"] = term
-        term_blocks[term] = blocks
-
-    got = _wand_shard(term_blocks, idfs, avgdl, k)
-    want = brute_force(term_postings, idfs, avgdl, k)
-    assert [(d, round(s, 9)) for s, d, _ in got] == [(d, round(s, 9)) for s, d in want]
-    # scores bit-identical (same deterministic term-sorted summation)
-    assert [s for s, _, _ in got] == [s for s, _ in want]
-
-
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_maxscore_equals_wand_and_bruteforce(term_postings, k):
-    """MaxScore == WAND == brute force, in both float and micros modes —
-    the two dynamic-pruning executors are interchangeable."""
-    from searchengine_spark.operators.segments import _maxscore_shard
-
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
-    term_blocks = {}
-    for term, posts in term_postings.items():
-        posts = sorted(posts)
-        ids = np.array([p[0] for p in posts], dtype=np.uint64)
-        tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-        dls = np.array([p[2] for p in posts], dtype=np.uint64)
-        blocks = codec.encode_blocks(
-            ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl, block_size=16
+            ids, tfs, dls, [[] for _ in posts], idf=IDFS[term], avgdl=AVGDL,
+            block_size=block_size,
         )
         for b in blocks:
             b["bucket"] = 0
             b["shard"] = 0
             b["term"] = term
         term_blocks[term] = blocks
+    return term_blocks
 
-    got = _maxscore_shard(term_blocks, idfs, avgdl, k)
-    want = brute_force(term_postings, idfs, avgdl, k)
+
+postings_st = st.dictionaries(
+    st.sampled_from(["alpha", "beta", "gamma", "delta"]),
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3000),
+            st.integers(min_value=1, max_value=30),
+            st.integers(min_value=5, max_value=500),
+        ),
+        min_size=1,
+        max_size=300,
+        unique_by=lambda t: t[0],
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@given(postings_st, st.integers(min_value=1, max_value=12))
+@settings(max_examples=80, deadline=None)
+def test_wand_equals_bruteforce(term_postings, k):
+    """Float mode: block-max returns brute force's top-k with bit-identical
+    scores (same sorted-term summation). block_size=16 → ≤19 blocks/term
+    (all-eager path); block_size=2 → up to 150 blocks (block-level bounds
+    + mixed eager/block path)."""
+    want = brute_force(term_postings, IDFS, AVGDL, k)
+    for bs in (16, 2):
+        got = _blockmax_seg_shard(term_blocks_of(term_postings, bs), IDFS, AVGDL, k)
+        assert [(d, s) for s, d, _ in got] == [(d, s) for s, d in want], bs
+
+
+@given(postings_st, st.integers(min_value=1, max_value=12))
+@settings(max_examples=80, deadline=None)
+def test_maxscore_equals_wand_and_bruteforce(term_postings, k):
+    """The `bm25_topk_maxscore` and `bm25_topk_wand` gates both serve from
+    block-max: it equals brute force in float mode (bit-identical scores)
+    and in micros mode (exact integers)."""
+    tb = term_blocks_of(term_postings, 16)
+    got = _blockmax_seg_shard(tb, IDFS, AVGDL, k)
+    want = brute_force(term_postings, IDFS, AVGDL, k)
     assert [(d, s) for s, d, _ in got] == [(d, s) for s, d in want]
-    # micros mode agrees with WAND micros mode (fresh blocks — iterators
-    # mutate state, so each executor needs its own decode cursors)
-    def fresh():
-        tb = {}
-        for term, posts in term_postings.items():
-            posts = sorted(posts)
-            ids = np.array([p[0] for p in posts], dtype=np.uint64)
-            tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-            dls = np.array([p[2] for p in posts], dtype=np.uint64)
-            blocks = codec.encode_blocks(
-                ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl,
-                block_size=16,
-            )
-            for b in blocks:
-                b["bucket"] = 0; b["shard"] = 0; b["term"] = term
-            tb[term] = blocks
-        return tb
+    got = _blockmax_seg_shard(tb, IDFS, AVGDL, k, micros=True)
+    want = brute_force(term_postings, IDFS, AVGDL, k, micros=True)
+    assert [(d, s) for s, d, _ in got] == [(d, s) for s, d in want]
 
-    ms = _maxscore_shard(fresh(), idfs, avgdl, k, micros=True)
-    wd = _wand_shard(fresh(), idfs, avgdl, k, micros=True)
-    assert [(d, s) for s, d, _ in ms] == [(d, s) for s, d, _ in wd]
+
+@given(postings_st, st.integers(min_value=1, max_value=12))
+@settings(max_examples=80, deadline=None)
+def test_blockmax_and_seg_exhaustive_equal_wand(term_postings, k):
+    """Micros mode: block-max == decode-all exhaustive == brute force over
+    block sizes — the pruning executor and its no-skipping reference agree
+    exactly under the integer contract the DuckDB oracles use.
+    block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 → up to
+    150 blocks (block-level coverage + mixed eager/block path)."""
+    want = brute_force(term_postings, IDFS, AVGDL, k, micros=True)
+    for bs in (16, 2):
+        tb = term_blocks_of(term_postings, bs)
+        bm = _blockmax_seg_shard(tb, IDFS, AVGDL, k, micros=True)
+        ex = _exhaustive_seg_shard(tb, IDFS, AVGDL, k, micros=True)
+        assert [(s, d) for s, d, _ in bm] == [(s, d) for s, d in want], bs
+        assert [(s, d) for s, d, _ in ex] == [(s, d) for s, d in want], bs
+
+
+@given(
+    st.dictionaries(
+        st.sampled_from(sorted(IDFS)),
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=400),
+                st.integers(min_value=1, max_value=3),
+                st.sampled_from([40, 80, 120]),
+            ),
+            min_size=1,
+            max_size=200,
+            unique_by=lambda t: t[0],
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+    st.integers(min_value=1, max_value=12),
+    st.sampled_from([4, 16, 128]),
+)
+@settings(max_examples=400, deadline=None)
+def test_blockmax_float_ties_bit_identical(term_postings, k, block_size):
+    """Many exact score ties (tf ∈ 1..3, three doc lengths): float scores
+    differing by one ulp would swap tied ranks, so the document sum and
+    the interval upper bound must both fold in sorted-term order — and the
+    float bound must never prune a top-k doc (no epsilon needed)."""
+    got = _blockmax_seg_shard(term_blocks_of(term_postings, block_size), IDFS, AVGDL, k)
+    want = brute_force(term_postings, IDFS, AVGDL, k)
+    assert [(d, s) for s, d, _ in got] == [(d, s) for s, d in want]
 
 
 def test_phrase_micros_equals_columnar(spark):
@@ -185,62 +194,3 @@ def test_span_first_topk_bounds(spark):
         .count()
     )
     assert len(out) == brute
-
-
-@given(
-    st.dictionaries(
-        st.sampled_from(["alpha", "beta", "gamma", "delta"]),
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3000),
-                st.integers(min_value=1, max_value=30),
-                st.integers(min_value=5, max_value=500),
-            ),
-            min_size=1,
-            max_size=300,
-            unique_by=lambda t: t[0],
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    st.integers(min_value=1, max_value=12),
-)
-@settings(max_examples=80, deadline=None)
-def test_blockmax_and_seg_exhaustive_equal_wand(term_postings, k):
-    """The two vectorized executors (interval-sweep block-max, decode-all
-    exhaustive) return exactly what doc-at-a-time WAND returns, in micros
-    mode — all four segment-served scorers are interchangeable."""
-    from searchengine_spark.operators.segments import (
-        _blockmax_seg_shard,
-        _exhaustive_seg_shard,
-    )
-
-    idfs = {"alpha": 2.3, "beta": 0.7, "gamma": 4.1, "delta": 1.0}
-    avgdl = 80.0
-
-    def fresh(block_size):
-        term_blocks = {}
-        for term, posts in term_postings.items():
-            posts = sorted(posts)
-            ids = np.array([p[0] for p in posts], dtype=np.uint64)
-            tfs = np.array([p[1] for p in posts], dtype=np.uint64)
-            dls = np.array([p[2] for p in posts], dtype=np.uint64)
-            blocks = codec.encode_blocks(
-                ids, tfs, dls, [[] for _ in posts], idf=idfs[term], avgdl=avgdl,
-                block_size=block_size,
-            )
-            for b in blocks:
-                b["bucket"] = 0
-                b["shard"] = 0
-                b["term"] = term
-            term_blocks[term] = blocks
-        return term_blocks
-
-    # block_size=16 → ≤19 blocks/term (all-eager path); block_size=2 →
-    # up to 150 blocks (block-level coverage + mixed eager/block path)
-    for bs in (16, 2):
-        wd = _wand_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        bm = _blockmax_seg_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        ex = _exhaustive_seg_shard(fresh(bs), idfs, avgdl, k, micros=True)
-        assert [(s, d) for s, d, _ in bm] == [(s, d) for s, d, _ in wd], bs
-        assert [(s, d) for s, d, _ in ex] == [(s, d) for s, d, _ in wd], bs
