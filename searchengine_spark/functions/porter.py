@@ -219,7 +219,3 @@ def porter_stem(word: str) -> str:
     if not word:
         return word
     return _Stemmer(word).stem()
-
-
-def stem_tokens(tokens: list[str]) -> list[str]:
-    return [porter_stem(t) for t in tokens]

@@ -132,18 +132,3 @@ def emit_postings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 else:
                     out[col].extend([False] * n)
         yield pd.DataFrame(out)
-
-
-DOCMETA_SCHEMA = "doc_id long, doc_len long, h1 boolean, h2 boolean, h3 boolean"
-
-
-def emit_docmeta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-doc totalTerms + page-level heading-presence flags
-    (Indexer.java:216-219)."""
-    for pdf in batches:
-        rows = []
-        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-            _, _, total = index_tokenize(content)
-            h1, h2, h3 = _heading_lines(content)
-            rows.append((doc_id, total, bool(h1), bool(h2), bool(h3)))
-        yield pd.DataFrame(rows, columns=["doc_id", "doc_len", "h1", "h2", "h3"])

@@ -1,7 +1,7 @@
 """spark-submit entry point: run queries against a built index.
 
     spark-submit --py-files sespark.zip searchengine_spark/jobs/run_queries.py \\
-        --index <index_dir> --query "inverted index" [--mode bm25|compat|wand] [--k 10]
+        --index <index_dir> --query "inverted index" [--mode compat|wand] [--k 10]
 """
 
 from __future__ import annotations
@@ -15,16 +15,15 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--index", required=True)
     p.add_argument("--query", required=True)
-    p.add_argument("--mode", choices=["bm25", "compat", "wand"], default="wand")
+    p.add_argument("--mode", choices=["compat", "wand"], default="wand")
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
     from searchengine_spark.session import get_spark
     from searchengine_spark.plans.build_index import load_index
-    from searchengine_spark.operators.query import is_phrase_query, search_bm25, search_compat
+    from searchengine_spark.plans.lineage import IndexManifest
+    from searchengine_spark.operators.query import is_phrase_query, search_compat
     from searchengine_spark.operators.segments import wand_topk
     from searchengine_spark.functions.textproc import query_tokenize
 
@@ -39,13 +38,10 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.mode == "compat":
         df = search_compat(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
-    elif args.mode == "bm25":
-        df = search_bm25(spark, idx["postings"], idx["lexicon"], idx["documents"], args.query, args.k)
     else:
-        stats = idx["documents"].agg(
-            F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")
-        ).collect()[0]
-        avgdl = float(stats["s"]) / float(stats["c"]) if stats["c"] else 1.0
+        # build_index records avgdl = sum(cf) / n_docs in the manifest: a
+        # driver-side read instead of an aggregate job over documents
+        avgdl = IndexManifest(args.index).stage_metrics()["lexicon"]["avgdl"]
         is_phrase = is_phrase_query(args.query)
         text = args.query[1:-1] if is_phrase else args.query
         df = wand_topk(

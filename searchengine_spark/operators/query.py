@@ -1,9 +1,10 @@
-"""Query entry points: term + phrase search, compat + BM25 modes
-(SURVEY.md §3.1-3.2).
+"""Query entry point over the built index: reference-compat term + phrase
+search (SURVEY.md §3.1-3.2). BM25 over the built index is served from the
+compressed segments by ``operators.segments.wand_topk``.
 
 Determinism contract (north rule: rank-identical across N / 4N executors):
-every float accumulation per doc is computed as a fold over the
-term-sorted contribution list (``_det_sum``) instead of a shuffle-order
+every float accumulation per doc is a left fold over the sorted query-term
+list (a per-term pivot, see ``search_compat``) instead of a shuffle-order
 ``SUM`` — same addends in the same order on any cluster size, so scores are
 bit-identical to the pure-Python oracle. Ties break by ascending doc_id.
 
@@ -40,11 +41,6 @@ from searchengine_spark.operators.scoring import (
 def is_phrase_query(query: str) -> bool:
     """SearchService.isPhraseSearch (:93-95)."""
     return query.startswith('"') and query.endswith('"') and len(query) > 2
-
-
-def _det_sum(sorted_structs: Column, field: str) -> Column:
-    """Deterministic float fold over an array<struct> already sorted by term."""
-    return F.aggregate(sorted_structs, F.lit(0.0), lambda acc, x: acc + x[field])
 
 
 def _candidates(postings: DataFrame, lexicon: DataFrame, spark: SparkSession, terms: list[str]) -> DataFrame:
@@ -320,82 +316,3 @@ def search_compat(
         for i, (r, s, text) in enumerate(survivors[:k])
     ]
     return spark.createDataFrame(rows, out_schema)
-
-
-# ---------------------------------------------------------------- BM25 search
-
-
-def search_bm25(
-    spark: SparkSession,
-    postings: DataFrame,
-    lexicon: DataFrame,
-    documents: DataFrame,
-    query: str,
-    k: int = 10,
-    positional_phrase: bool = True,
-) -> DataFrame:
-    """BM25 mode: (rank, doc_id, url, score). Phrase queries use correct
-    positional adjacency (our fix of quirk Q10) when ``positional_phrase``."""
-    phrase = query[1:-1] if is_phrase_query(query) else None
-    terms = query_tokenize(phrase if phrase is not None else query)
-    if not terms:
-        return spark.createDataFrame([], "rank int, doc_id long, url string, score double")
-
-    matched = _candidates(postings, lexicon, spark, terms)
-
-    if phrase is not None and positional_phrase and len(terms) >= 2:
-        matched = matched.join(
-            _positional_phrase_docs(matched, terms), "doc_id", "left_semi"
-        )
-
-    # deterministic fold for the BM25 sum as well
-    stats = documents.agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
-    avgdl = (float(stats["s"]) / float(stats["c"])) if stats["c"] else 1.0
-    tf = F.col("tf").cast("double")
-    dl = F.col("doc_len").cast("double")
-    k1, b = 1.2, 0.75
-    contrib = F.col("idf_bm25") * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
-
-    per_doc = (
-        matched.select("doc_id", "term", contrib.alias("_c"))
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("term", "_c"))).alias("_contribs"))
-        .select("doc_id", _det_sum(F.col("_contribs"), "_c").alias("score"))
-        .join(documents.select("doc_id", "url"), "doc_id")
-    )
-    from pyspark.sql import Window
-
-    ranked = per_doc.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return ranked.select(
-        F.row_number()
-            .over(
-                # rank over the already-limited <=k rows; the single-valued
-                # partition key (non-foldable, so the optimizer keeps it) is
-                # intentional — bounded input, and no spurious "No Partition
-                # Defined" warning from an empty partition spec
-                Window.partitionBy(F.col("doc_id") % 1).orderBy(F.desc("score"), F.asc("doc_id"))
-            )
-            .alias("rank"),
-        "doc_id",
-        "url",
-        "score",
-    )
-
-
-def _positional_phrase_docs(matched: DataFrame, terms: list[str]) -> DataFrame:
-    """Docs where the stemmed terms appear at consecutive positions —
-    adjacency over the stored positions arrays (the index positions count
-    skipped tokens, Q4, but consecutive kept tokens still differ by 1 unless
-    a short/stopword token intervened; matching the reference's *index*, not
-    raw text)."""
-    pos = matched.select("doc_id", "term", F.explode("positions").alias("p"))
-    first = pos.filter(F.col("term") == terms[0]).select("doc_id", F.col("p").alias("p0"))
-    out = first
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("_d"), F.col("p").alias(f"p{i}")
-        )
-        out = out.join(
-            nxt, (out.doc_id == nxt._d) & (nxt[f"p{i}"] == out.p0 + i), "inner"
-        ).select(out.doc_id, out.p0)
-    return out.select("doc_id").distinct()

@@ -1,4 +1,5 @@
-"""Query-time scoring: reference-compat (Ranker.java) and BM25 modes.
+"""Reference-compat score weights (Ranker.java) for the compat scorer,
+``operators.query.search_compat``.
 
 The compat scorer reproduces Ranker.java:30-97 exactly (quirks Q3, Q9, Q14,
 Q15), but as ONE hash aggregate + ONE per-query window instead of the
@@ -20,23 +21,7 @@ reference's N+1 Mongo lookups per posting (SearchService.java:301-302):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
 TITLE_WEIGHT = 0.7
 H1_WEIGHT, H2_WEIGHT, H3_WEIGHT = 0.45, 0.25, 0.1
 TFIDF_WEIGHT = 0.4
 PAGERANK_WEIGHT = 0.3
-
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
-def match_postings(postings, lexicon, qterms):
-    """Candidate postings for the query terms: broadcast the tiny query-term
-    set against both tables (J1 — the reference's per-term point lookups)."""
-    from pyspark.sql import functions as F
-
-    return postings.join(F.broadcast(qterms), "term").join(
-        F.broadcast(lexicon.join(F.broadcast(qterms), "term")), "term"
-    )

@@ -664,8 +664,8 @@ def _phrase_micros_in_shard(
     the FULL term sequence — a repeated term must repeat adjacently), and
     score them with a sorted-term fold. ``micros=True`` rounds each term
     contribution to micros BEFORE the sum, so the ranking hash-matches the
-    columnar phrase_topk oracle; ``micros=False`` gives the same floats as
-    query.search_bm25's positional phrase mode. ``terms`` is the phrase's
+    columnar phrase_topk oracle; ``micros=False`` gives the floats of
+    ``tests/oracle.py``'s positional phrase mode. ``terms`` is the phrase's
     full sequence; bind it with ``functools.partial`` to get the shard
     executor signature ``_pruned_topk`` calls."""
     per_term: list[dict[int, tuple]] = []
@@ -711,13 +711,15 @@ def wand_topk(
 ) -> DataFrame:
     """Segment-served BM25 top-k with urls and ranks: the shared driver
     plan (``_pruned_topk``) with float scores from the block-max executor
-    (``_blockmax_seg_shard``) → url join → rank. Scores are bit-identical
-    to ``query.search_bm25`` (both fold terms in sorted order).
+    (``_blockmax_seg_shard``) → url join → rank. This is the one BM25 path
+    over the built index. Scores fold terms in sorted order, as
+    ``tests/oracle.py`` does; they match that oracle to 1e-9 (the stored
+    idf is Spark's ``log``, which can sit 1 ulp from Python's).
 
     With ``phrase=True`` the per-shard executor first restricts to docs where
     the terms are position-adjacent (decoded from the positions blobs), then
-    scores those docs exactly — same semantics as query.search_bm25's
-    positional phrase mode, but served entirely from the compressed index."""
+    scores those docs exactly — same semantics as the oracle's positional
+    phrase mode, but served entirely from the compressed index."""
     from pyspark.sql import Window
 
     terms = list(query_terms)  # full sequence — phrase adjacency needs dups
@@ -827,8 +829,8 @@ def _blockmax_seg_shard(
 
     Exactness, in both modes, with no epsilon. A doc's score and an
     interval's UB both fold their terms in sorted-term order from zero —
-    the order of ``query.search_bm25`` and ``tests/oracle.py``, so float
-    scores are bit-identical to them. With ``micros=True`` every sum is an
+    the order of ``tests/oracle.py``, so float scores are bit-identical to
+    it given the same idf and avgdl. With ``micros=True`` every sum is an
     exact integer. With floats the bound is still safe: IEEE addition is
     monotone (a ≤ a', b ≤ b' ⇒ fl(a+b) ≤ fl(a'+b')), each term's bound is
     ≥ its contribution to any doc of the interval, and a term the doc lacks

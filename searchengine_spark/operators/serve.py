@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BM25_K1 = 1.2
-BM25_B = 0.75
+from searchengine_spark.operators.codec import BM25_B, BM25_K1
 
 _EMPTY_TOPK = "doc_id long, score_micros long"
 
@@ -233,6 +232,32 @@ def bm25_page(
     return bm25_search_after(spark, idx, query_terms, cursor, k=k)
 
 
+def _champion_postings(
+    idx: dict, rows: list, max_postings: int, salts: int
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, champions) for the query's lexicon ``rows``: the
+    bucket-pruned postings scan, and each term's champion list — its top
+    ``max_postings`` postings by (tf desc, doc_id asc). The truncation is
+    the two-phase salted grouped top-k from :func:`bm25_batch_topk`, so no
+    single partition ever holds a hot term's full posting list."""
+    from pyspark.sql import Window
+
+    post = _pruned_postings(idx, rows)
+    order = [F.desc("tf"), F.asc("doc_id")]
+    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
+        *order
+    )
+    final = Window.partitionBy("term").orderBy(*order)
+    champions = (
+        post.withColumn("_pr", F.row_number().over(partial))
+        .filter(F.col("_pr") <= max_postings)
+        .withColumn("_r", F.row_number().over(final))
+        .filter(F.col("_r") <= max_postings)
+        .drop("_pr", "_r")
+    )
+    return post, champions
+
+
 def bm25_topk_pruned(
     spark: SparkSession,
     idx: dict,
@@ -248,32 +273,17 @@ def bm25_topk_pruned(
     tier ships — at 10^12 docs a stopword's posting list is bounded to a
     constant instead of scanned.
 
-    The per-term truncation is the two-phase salted grouped top-k from
-    :func:`bm25_batch_topk` (no single partition ever holds a hot term's
-    full posting list). Scoring/tie-breaks share the single-definition
+    The per-term truncation is :func:`_champion_postings`, shared with
+    :func:`bm25_topk_tiered`. Scoring/tie-breaks share the single-definition
     :func:`_bm25_contrib` micros contract, so the DuckDB oracle replicates
     the pruned ranking bit-for-bit."""
-    from pyspark.sql import Window
-
     rows = _qlex(spark, idx, query_terms)
     if not rows:
         return spark.createDataFrame([], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    order = [F.desc("tf"), F.asc("doc_id")]
-    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
-        *order
-    )
-    final = Window.partitionBy("term").orderBy(*order)
-    pruned = (
-        post.withColumn("_pr", F.row_number().over(partial))
-        .filter(F.col("_pr") <= max_postings)
-        .withColumn("_r", F.row_number().over(final))
-        .filter(F.col("_r") <= max_postings)
-        .drop("_pr", "_r")
-    )
+    _, champions = _champion_postings(idx, rows, max_postings, salts)
     contrib = _bm25_contrib(idx["avgdl"])
     return (
-        pruned.join(F.broadcast(_lex_df(spark, rows)), "term")
+        champions.join(F.broadcast(_lex_df(spark, rows)), "term")
         .select("doc_id", F.round(contrib * 1e6).cast("long").alias("c_micros"))
         .groupBy("doc_id")
         .agg(F.sum("c_micros").alias("score_micros"))
@@ -306,25 +316,11 @@ def bm25_topk_tiered(
     ≤ |q|·max_postings candidate docs before any scoring work. Both
     phases share the single-definition :func:`_bm25_contrib` micros
     contract."""
-    from pyspark.sql import Window
-
     rows = _qlex(spark, idx, query_terms)
     if not rows:
         return spark.createDataFrame([], _EMPTY_TOPK)
-    post = _pruned_postings(idx, rows)
-    order = [F.desc("tf"), F.asc("doc_id")]
-    partial = Window.partitionBy("term", F.pmod(F.col("doc_id"), F.lit(salts))).orderBy(
-        *order
-    )
-    final = Window.partitionBy("term").orderBy(*order)
-    cands = (
-        post.withColumn("_pr", F.row_number().over(partial))
-        .filter(F.col("_pr") <= max_postings)
-        .withColumn("_r", F.row_number().over(final))
-        .filter(F.col("_r") <= max_postings)
-        .select("doc_id")
-        .distinct()
-    )
+    post, champions = _champion_postings(idx, rows, max_postings, salts)
+    cands = champions.select("doc_id").distinct()
     contrib = _bm25_contrib(idx["avgdl"])
     return (
         post.join(cands, "doc_id", "left_semi")

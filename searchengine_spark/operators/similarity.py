@@ -30,10 +30,6 @@ from pyspark.sql import functions as F
 from searchengine_spark.functions.planes import plane_ints
 
 
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
 def _quantized(arr: Column) -> Column:
     """float32 elements → bigint micros. All inner products then run in
     exact integer arithmetic (order-insensitive, engine-portable); the

@@ -123,10 +123,7 @@ def build_index(
         # encode stage parallelizes even on small/tiny-vocab corpora, floor
         # 4096 docs/shard (block-metadata amortization), cap 2^20 (at 10^12
         # files that still yields ~10^6 shards x vocab groups).
-        env_span = os.environ.get("SPARK_GRAFT_SHARD_SPAN")
-        span = shard_span or (
-            int(env_span) if env_span else min(1 << 20, max(4096, n_docs // 256))
-        )
+        span = shard_span or min(1 << 20, max(4096, n_docs // 256))
         n_terms = sum(p["rows"] for p in lin.partition_metrics(stage_path("lexicon")))
         with lin.StageTimer() as t:
             seg = encode_segments(post, lex, avgdl, shard_span=span)

@@ -38,13 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if "." in sf_dir and os.sep not in sf_dir:
         return spark.read.table(f"{sf_dir}.{name}")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """Write an immutable table version (the analog of the reference's
-    point-updates, DBController.java:55-82, which we replace with
-    write-once snapshots)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -1,7 +1,8 @@
 """End-to-end golden test: build the index over the synthetic corpus, run the
-reference query set in compat + BM25 modes, and require rank-identical top-k
-(doc ids exact; scores to 1e-9) versus the pure-Python oracle (SURVEY.md §5.3,
-BASELINE.json north_star)."""
+reference query set in compat mode and through the segment-served BM25 path
+(``wand_topk``), and require rank-identical top-k (doc ids exact; scores to
+1e-9) versus the pure-Python oracle (SURVEY.md §5.3, BASELINE.json
+north_star)."""
 
 from __future__ import annotations
 
@@ -9,8 +10,13 @@ import math
 
 import pytest
 
-from searchengine_spark.operators.query import search_bm25, search_compat
+from pyspark.sql import functions as F
+
+from searchengine_spark.functions.textproc import query_tokenize
+from searchengine_spark.operators.query import is_phrase_query, search_compat
+from searchengine_spark.operators.segments import wand_topk
 from searchengine_spark.plans.build_index import build_index, load_index
+from searchengine_spark.plans.lineage import IndexManifest
 from searchengine_spark.sources.corpus import generate_corpus, generate_corpus_pdf
 from tests.oracle import OracleIndex
 
@@ -31,11 +37,21 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def index(spark, tmp_path_factory):
+def index_dir(spark, tmp_path_factory):
     corpus = generate_corpus(spark, N_DOCS, seed=42, n_partitions=8)
     index_dir = str(tmp_path_factory.mktemp("index"))
     build_index(spark, corpus, index_dir)
+    return index_dir
+
+
+@pytest.fixture(scope="module")
+def index(spark, index_dir):
     return load_index(spark, index_dir)
+
+
+def _avgdl(index) -> float:
+    stats = index["documents"].agg(F.sum("doc_len").alias("s"), F.count(F.lit(1)).alias("c")).collect()[0]
+    return float(stats["s"]) / float(stats["c"])
 
 
 @pytest.fixture(scope="module")
@@ -94,8 +110,10 @@ def test_compat_rank_identity(spark, index, oracle, query):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_bm25_rank_identity(spark, index, oracle, query):
-    got = search_bm25(
-        spark, index["postings"], index["lexicon"], index["documents"], query, k=10
+    phrase = is_phrase_query(query)
+    got = wand_topk(
+        spark, index["segments"], index["lexicon"], index["documents"],
+        query_tokenize(query[1:-1] if phrase else query), _avgdl(index), k=10, phrase=phrase,
     ).collect()
     want = oracle.search_bm25(query, k=10)
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], (
@@ -105,6 +123,13 @@ def test_bm25_rank_identity(spark, index, oracle, query):
     )
     for g, w in zip(got, want):
         assert abs(g["score"] - w["score"]) <= 1e-9
+
+
+def test_manifest_avgdl_equals_documents_aggregate(spark, index_dir, index):
+    """``run_queries`` serves BM25 with the avgdl ``build_index`` records in
+    the manifest (sum(cf) / n_docs) instead of aggregating documents; the
+    two must be the same double."""
+    assert IndexManifest(index_dir).stage_metrics()["lexicon"]["avgdl"] == _avgdl(index)
 
 
 def test_sha256_invariant(spark, index):
